@@ -1,7 +1,22 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** A bench query failed: the bench reports no time for work that did
+   * not complete, and exits non-zero. */
+  final class BenchQueryFailed(name: String, cause: Throwable)
+    extends RuntimeException(s"bench query $name failed: ${cause.getMessage}", cause)
+
+  /** Run one `SparkEntry` query to completion. A full-row `noop` write executes
+   * every projected column; `.count()` would let Catalyst prune them. */
+  private def run(spark: SparkSession, sfDir: String, name: String): Unit =
+    try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+    catch { case NonFatal(e) => throw new BenchQueryFailed(name, e) }
+
   def main(args: Array[String]): Unit = {
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -21,28 +36,36 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // warm-up off the clock: codec/JIT/parquet-footer init otherwise lands
     // on whichever query happens to run first
-    try SparkEntry.queries.headOption.foreach(_._2(spark, sfDir).count())
-    catch { case _: Throwable => () }
-    // r25's encoded snapshot is a commit-once store STAGE (resume-by-
-    // manifest); build it off the clock so the timed run measures the
-    // encoded-read path, not the one-time materialization
-    try SparkEntry.queries.get("r25_encoded_bgp").foreach(_(spark, sfDir).count())
-    catch { case _: Throwable => () }
+    try {
+      SparkEntry.queries.keys.headOption.foreach(run(spark, sfDir, _))
+      // r25's encoded snapshot is a commit-once store STAGE (resume-by-
+      // manifest); build it off the clock so the timed run measures the
+      // encoded-read path, not the one-time materialization
+      if (SparkEntry.queries.contains("r25_encoded_bgp")) run(spark, sfDir, "r25_encoded_bgp")
+      measure(spark, sfDir, args)
+    } catch {
+      case e: BenchQueryFailed =>
+        e.printStackTrace()
+        spark.stop()
+        sys.exit(1)
+    }
+    spark.stop()
+  }
+
+  private def measure(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     // Warm protocol, min of 2 runs per query: the first execution pays
     // one-time Janino whole-stage-codegen compilation + JIT (measured
     // 1–8 s per query, ~0 s on re-run) — a fixed driver-side cost that
     // amortizes to zero at the 100 TB target scale, so steady-state
     // per-query wall time is the number that predicts cluster throughput.
     // optional args = query names to time (iteration aid); default all
-    val unknown = args.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     val selected =
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(args.toSet).toMap
-    val results = selected.map { case (name, fn) =>
+    val results = selected.map { case (name, _) =>
       val runs = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        run(spark, sfDir, name)
         (System.nanoTime() - t0) / 1e9
       }
       name -> runs.min
@@ -51,6 +74,5 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     println(s"""{"metric":"total","value":$total,"unit":"sec","protocol":"per-query min of 2 runs (warm steady-state)","queries":$qs,"sf":"$sfDir"}""")
-    spark.stop()
   }
 }

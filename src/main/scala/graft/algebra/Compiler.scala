@@ -412,7 +412,7 @@ object Compiler {
         else out
       }
 
-    case Lateral(l, r) => lateral(comp(l, g), r, g)
+    case Lateral(l, r) => lateral(comp(l, g), r, g, comp)
 
     case Unfold(listVar, outVar, idxVar, in) =>
       unfoldC(comp(in, g), listVar, outVar, idxVar)
@@ -807,23 +807,20 @@ object Compiler {
 
     case PathPattern(s0, path, o0) =>
       val nq = namedQuadsDf(g)
-      // seeded per-graph evaluation for constant endpoints (the GRAPH
-      // ?var twin of compPath's ALP seeding): the seed set is
-      // (graph, const) for every named graph — the packed closure walks
-      // only each graph's cone from the constant
-      val seedOnG = g.spark.conf
-        .getOption("graft.pathSeededEval").forall(_ != "off")
-      def constSeeds(t: Term): DataFrame =
-        namedGraphNamesDf(g).select(col("g"), TermCols.const(t).as("n"))
-      var prs: DataFrame =
-        if (!seedOnG || !PathEval.containsClosure(path)) PathEval.pairsG(nq, path)
-        else (s0, o0) match {
-          case (TConst(t), _) => PathEval.pairsGFrom(nq, path, constSeeds(t))
-          case (_, TConst(t)) =>
-            PathEval.pairsGFrom(nq, PathEval.inverse(path), constSeeds(t))
-              .select(col("g"), col("dst").as("src"), col("src").as("dst"))
-          case _ => PathEval.pairsG(nq, path)
-        }
+      // a closure-bearing path with a constant endpoint is seeded per
+      // graph (the GRAPH ?var twin of compPath's ALP seeding): the seed
+      // set is (graph, const) for every named graph, so the packed
+      // closure walks only each graph's cone from the constant
+      def constSeeds(t: Term): Option[DataFrame] =
+        Some(namedGraphNamesDf(g).select(col("g"), TermCols.const(t).as("n")))
+      val seeded = PathEval.containsClosure(path)
+      var prs: DataFrame = (s0, o0) match {
+        case (TConst(t), _) if seeded => PathEval.graphPairs(nq, path, constSeeds(t))
+        case (_, TConst(t)) if seeded =>
+          PathEval.graphPairs(nq, PathEval.inverse(path), constSeeds(t))
+            .select(col("g"), col("dst").as("src"), col("src").as("dst"))
+        case _ => PathEval.graphPairs(nq, path, None)
+      }
       if (PathEval.allowsZero(path)) {
         // zero-length const endpoints match themselves in EVERY named
         // graph (per-graph twin of the PathPattern zero augmentation)
@@ -1098,9 +1095,10 @@ object Compiler {
    * certainly — evaluation is SEEDED: the closure frontier starts from the
    * bound node set and walks only the reachable cone (the ALP algorithm,
    * PathEngine.java:49–122), instead of materializing the global closure
-   * and post-filtering. Non-closure paths keep the global plan: Catalyst
-   * pushes endpoint filters through scan/join chains by itself; only the
-   * iterative loop (a localCheckpoint pushdown barrier) needs help. */
+   * and post-filtering, which measured ~9× slower on r28. Non-closure
+   * paths keep the global plan: Catalyst pushes endpoint filters through
+   * scan/join chains by itself; only the iterative loop (a
+   * localCheckpoint pushdown barrier) needs help. */
   private def compPath(g: GraphSource, s: TermPat, path: Path, o: TermPat,
                        leftSeeds: Option[Compiled]): Compiled = {
     def seedDfFor(p: TermPat): Option[DataFrame] = p match {
@@ -1108,13 +1106,8 @@ object Compiler {
         .map(_.df.select(col(v).as("n")))
       case _ => None
     }
-    // escape hatch (and the honest A/B lever for the seeded-vs-global
-    // closure benchmark): graft.pathSeededEval=off forces the pre-r5
-    // global-closure-then-filter plan
-    val seedOn = g.spark.conf
-      .getOption("graft.pathSeededEval").forall(_ != "off")
     var pairs: DataFrame =
-      if (!PathEval.containsClosure(path) || !seedOn) PathEval.pairs(g, path)
+      if (!PathEval.containsClosure(path)) PathEval.pairs(g, path)
       else (s, o) match {
         case (TConst(t), _) => PathEval.pairsFromConst(g, path, t)
         case (_, TConst(t)) => PathEval.pairsFromConst(g, PathEval.inverse(path), t)
@@ -1347,7 +1340,7 @@ object Compiler {
    * tag + checkpoint are paid only when [[perRowSensitive]] says the RHS
    * needs them — a plain RHS stays the old single-join plan. */
   private def lateral(l: Compiled, r: Op, g: GraphSource,
-                      leaf: (Op, GraphSource) => Compiled = comp): Compiled =
+                      leaf: (Op, GraphSource) => Compiled): Compiled =
     if (!perRowSensitive(r)) lat(l, r, g, tag = "", leaf)
     else {
       val t = freshTag()
@@ -1444,7 +1437,7 @@ object Compiler {
    * per-row-sensitive); the result holds left + RHS columns with the
    * substitution semantics applied. */
   private def lat(l: Compiled, r: Op, g: GraphSource, tag: String,
-                  leaf: (Op, GraphSource) => Compiled = comp): Compiled = r match {
+                  leaf: (Op, GraphSource) => Compiled): Compiled = r match {
     case Filter(cond, in) =>
       // RHS filters see the LEFT bindings (lateral-3 "filter scope")
       val c = lat(l, in, g, tag, leaf)
@@ -1454,7 +1447,7 @@ object Compiler {
       require(!c.vars.contains(name), s"Extend onto bound var $name")
       Compiled(c.df.withColumn(name, expr(v => resolve(c, v))),
         c.certain, c.maybe + name)
-    case Join(a, b) => lat(lat(l, a, g, tag, leaf), b, g, tag)
+    case Join(a, b) => lat(lat(l, a, g, tag, leaf), b, g, tag, leaf)
     case Union(a, b) => unionPad(lat(l, a, g, tag, leaf), lat(l, b, g, tag, leaf))
     case Distinct(in) =>
       // per-left-row dedup: the tag keeps duplicate left rows distinct
@@ -1668,15 +1661,36 @@ object Compiler {
 
 /**
  * Property-path evaluation over the triple DataFrame — set-at-a-time
- * replacement for the reference's per-binding ALP BFS
- * (PathEngine.java:96–129). Closure operators reuse the semi-naive
- * frontier-delta loop (graft.ops.Graphs), whose per-round work is
- * proportional to the new-pairs delta and whose lineage is truncated by
- * localCheckpoint — the property the north rule's CC pass also relies on.
+ * replacement for the reference's per-binding ALP walk
+ * (PathEngine.java:49–129). Like the reference's single path engine, ONE
+ * recursive evaluator serves every case. It runs over a path space:
+ *
+ *  - the struct space of a graph source: term-struct `src`/`dst` columns;
+ *  - the id space of an encoded snapshot: LONG `src`/`dst` columns, the
+ *    dictionary joined in once per endpoint at the projection edge;
+ *  - the per-graph space of GRAPH ?var: a `g` key column rides beside
+ *    `src`/`dst`, every join keys on it and closures pack struct(g, n)
+ *    into the loop's node, so a walk never crosses graphs.
+ *
+ * Seeds are optional. Without seeds the evaluator returns every pair the
+ * path connects. With seeds — a frame of (keys…, n) rows — it returns the
+ * pairs whose `src` (with its keys) is a seed, and closures run the
+ * frontier loop from the seeds (Graphs.reachableFrom) instead of closing
+ * the whole relation: the ALP analog, which walks only the seeds' cone.
+ * A bound object seeds the [[inverse]] path and swaps the result.
+ *
+ * Bag vs set per arm: link, `^`, negated sets, `/`, `|` and `{n}` keep
+ * one pair per derivation (the reference flattens them into BGPs,
+ * TransformPathFlatten); `+`, `*`, `?`, `{n,m}`, `{n,}` and ARQ's
+ * `distinct` return distinct pairs (the ALP visited-set contract); ARQ's
+ * `multi` passes its sub-path's pairs through unchanged.
+ * Closures reuse the semi-naive frontier-delta loop of graft.ops.Graphs,
+ * whose per-round work is proportional to the new-pairs delta and whose
+ * lineage is truncated by localCheckpoint.
  */
 object PathEval {
 
-  import Compiler.{GraphSource, SnapshotGraph}
+  import Compiler.{EncodedSnapshotGraph, GraphSource, SnapshotGraph}
 
   /** Can `path` match with zero steps? (Drives the constant-endpoint
    * zero-length augmentation in the PathPattern compile.) */
@@ -1730,213 +1744,54 @@ object PathEval {
     case _ => false
   }
 
-  /** The ACTIVE graph's triples: paths evaluate in the active graph
-   * exactly like BGPs, so on a quad table only default-graph rows (and no
-   * empty-graph marker rows) participate — without this filter a
-   * top-level path would traverse NAMED-graph edges (caught by the quad
-   * differential gate). Shares the Bgp scan's definition. */
-  private def activeTriples(g: GraphSource): DataFrame =
-    Compiler.defaultGraphTriples(g.df)
+  /** All (src, dst) term pairs connected by `path` in the active graph.
+   * Over an id-encoded snapshot an id-expressible path runs on LONG ids. */
+  def pairs(g: GraphSource, path: Path): DataFrame = eval(structSpace(g), path, None)
 
-  /** All (src, dst) term pairs connected by `path`. Over a store snapshot,
-   * a plain link scans the POS layout with the predicate pushed down (the
-   * hot case — every closure's per-round probe); composite paths fall back
-   * to the struct view. Over an ID-ENCODED snapshot, id-expressible paths
-   * evaluate entirely on LONG columns ([[pairsId]]) — closure joins move
-   * 16-byte rows, the dictionary joins in exactly once per endpoint at
-   * the projection edge. */
-  def pairs(g: GraphSource, path: Path): DataFrame = g match {
-    case esg: Compiler.EncodedSnapshotGraph if idExpressible(path) =>
-      decodeIdPairs(esg, pairsId(esg, path))
-    case _ => pairs0(g, path)
+  /** [[pairs]] restricted to `src` = `t`, walking only the cone of `t`
+   * (seed the inverse path and swap for a bound object). Over an encoded
+   * snapshot an id-expressible walk stays in id space: one local
+   * dictionary probe for the seed. */
+  def pairsFromConst(g: GraphSource, path: Path, t: Term): DataFrame = g match {
+    case esg: EncodedSnapshotGraph if idExpressible(path) =>
+      val seed = esg.idsOf(Seq(t)).get(t) match {
+        case Some(id) => esg.spark.range(1).select(lit(id).as("n"))
+        case None => esg.spark.range(0).select(col("id").as("n"))
+      }
+      decodeIdPairs(esg, eval(idSpace(esg), path, Some(seed)))
+    case _ =>
+      eval(structSpace(g), path, Some(g.spark.range(1).select(TermCols.const(t).as("n"))))
   }
 
-  // ---- seeded (bound-endpoint) evaluation — the ALP analog ------------
-  //
-  // Jena's path engine never closes the whole relation when an endpoint
-  // is known: ALP seeds a BFS at the bound node and visits its cone
-  // (path/eval/PathEngine.java:49–122, PathEngineSPARQL.java:36). The
-  // distributed analog: the SAME frontier-delta loop as the global
-  // closure, with the first frontier = the seed set's out-edges instead
-  // of every edge (Graphs.reachableFrom). Results equal
-  // pairs(g, path) restricted to src ∈ seeds, bag semantics per shape.
-
-  /** Seeded pairs for one CONSTANT endpoint term (seed the inverse path
-   * and swap for a bound object). Over an encoded snapshot the walk stays
-   * in id space: one driver dictionary probe for the seed, closure joins
-   * on LONGs, decode at the projection edge. */
-  def pairsFromConst(g: GraphSource, path: Path, t: graft.model.Term): DataFrame =
-    g match {
-      case esg: Compiler.EncodedSnapshotGraph if idExpressible(path) =>
-        val seedIds = esg.idsOf(Seq(t)).get(t) match {
-          case Some(id) => esg.spark.range(1).select(lit(id).as("n"))
-          case None => esg.spark.range(0).select(col("id").as("n"))
-        }
-        decodeIdPairs(esg, pairsIdFrom(esg, path, seedIds))
-      case _ =>
-        pairsFrom0(g, path,
-          g.spark.range(1).select(TermCols.const(t).as("n")))
-    }
-
-  /** Seeded pairs for a join-bound endpoint: `seeds` is a one-column frame
-   * of term structs (the join partner's certain values for the endpoint
-   * var). Over an encoded snapshot the seeds encode through one dictionary
-   * join, then the walk stays in id space. */
-  def pairsFromSeeds(g: GraphSource, path: Path, seeds: DataFrame): DataFrame =
-    g match {
-      case esg: Compiler.EncodedSnapshotGraph if idExpressible(path) =>
-        val sd = seeds.toDF("n").distinct()
-        val idSeeds = sd.join(esg.terms,
-            col("n.kind") === col("kind") && col("n.lex") === col("lex") &&
-              col("n.dt") === col("dt") && col("n.lang") === col("lang"))
-          .select(col("id").as("n"))
-        decodeIdPairs(esg, pairsIdFrom(esg, path, idSeeds))
-      case _ => pairsFrom0(g, path, seeds)
-    }
-
-  /** Identity pairs over seeds ∩ graph nodes (the restricted zero-length
-   * set: global allNodes ∩ src∈seeds). */
-  private def seedIdentity(nodes: DataFrame, seeds: DataFrame): DataFrame =
-    nodes.join(seeds.toDF("n").distinct(), col("src") === col("n"), "left_semi")
-
-  private def pairsFrom0(g: GraphSource, path: Path, seeds0: DataFrame): DataFrame = {
-    val seeds = seeds0.toDF("n").distinct()
-    path match {
-      // leaves: a single scan — restrict src by a semi-join against the
-      // (small, broadcastable) seed frame; Catalyst keeps the predicate
-      // pushdown of the underlying scan
-      case PLink(_) | PNegPropSet(_, _) | PInverse(PLink(_)) =>
-        pairs(g, path).join(seeds, col("src") === col("n"), "left_semi")
-      case PInverse(q) => pairsFrom0(g, inverse(q), seeds)
-      case PSeq(a, b) =>
-        val l = pairsFrom0(g, a, seeds)
-        val r = pairsFrom0(g, b, l.select(col("dst").as("n")))
-        l.select(col("src"), col("dst").as("__mid"))
-          .join(r.select(col("src").as("__mid2"), col("dst")),
-            col("__mid") === col("__mid2"))
-          .select(col("src"), col("dst"))
-      case PAlt(a, b) =>
-        pairsFrom0(g, a, seeds).union(pairsFrom0(g, b, seeds))
-      case POneOrMore(q) =>
-        // inner pairs stay global (they ARE the edge relation the cone
-        // walks); the closure itself is seeded. Select by NAME first:
-        // reachableFrom renames positionally and scan output order is
-        // not guaranteed (same guard as the global closure callers).
-        Graphs.reachableFrom(pairs(g, q).select(col("src"), col("dst")), seeds)
-      case PZeroOrMore(q) =>
-        Graphs.reachableFrom(pairs(g, q).select(col("src"), col("dst")), seeds)
-          .union(seedIdentity(allNodes(g), seeds)).distinct()
-      case PZeroOrOne(q) =>
-        pairsFrom0(g, q, seeds)
-          .union(seedIdentity(allNodes(g), seeds)).distinct()
-      case PFixedLength(q, n) =>
-        require(n >= 1, "PFixedLength n must be >= 1")
-        var acc = pairsFrom0(g, q, seeds)
-        for (_ <- 2 to n) {
-          val nxt = pairsFrom0(g, q, acc.select(col("dst").as("n")))
-          acc = acc.select(col("src"), col("dst").as("__m"))
-            .join(nxt.select(col("src").as("__m2"), col("dst")),
-              col("__m") === col("__m2"))
-            .select(col("src"), col("dst"))
-        }
-        acc
-      case PMod(q, min, max) =>
-        require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
-        if (max < 0) {
-          val head =
-            if (min == 0) seedIdentity(allNodes(g), seeds)
-            else pairsFrom0(g, PFixedLength(q, min), seeds)
-          val star = pairsFrom0(g, PZeroOrMore(q), head.select(col("dst").as("n")))
-          head.select(col("src"), col("dst").as("__m"))
-            .join(star.select(col("src").as("__m2"), col("dst")),
-              col("__m") === col("__m2"))
-            .select(col("src"), col("dst")).distinct()
-        } else {
-          val parts = (math.max(min, 1) to max)
-            .map(k => pairsFrom0(g, PFixedLength(q, k), seeds))
-          val fixed =
-            if (parts.isEmpty) seedIdentity(allNodes(g), seeds)
-            else parts.reduce(_ union _)
-          val withZero =
-            if (min == 0) fixed.union(seedIdentity(allNodes(g), seeds)) else fixed
-          withZero.distinct()
-        }
-      case PDistinct(q) => pairsFrom0(g, q, seeds).distinct()
-      case PMulti(q) => pairsFrom0(g, q, seeds)
-      case PShortest(q) =>
-        throw new UnsupportedOperationException(
-          s"P_Shortest is not implemented (matching the reference): $q")
-    }
+  /** [[pairs]] restricted to `src` ∈ `seeds`, a one-column frame of term
+   * structs (the join partner's certain values for the endpoint var). Over
+   * an encoded snapshot the seeds encode through one dictionary join and
+   * an id-expressible walk stays in id space. */
+  def pairsFromSeeds(g: GraphSource, path: Path, seeds: DataFrame): DataFrame = g match {
+    case esg: EncodedSnapshotGraph if idExpressible(path) =>
+      val idSeeds = seeds.toDF("n").distinct().join(esg.terms,
+          col("n.kind") === col("kind") && col("n.lex") === col("lex") &&
+            col("n.dt") === col("dt") && col("n.lang") === col("lang"))
+        .select(col("id").as("n"))
+      decodeIdPairs(esg, eval(idSpace(esg), path, Some(idSeeds)))
+    case _ => eval(structSpace(g), path, Some(seeds))
   }
 
-  /** Id-space twin of [[pairsFrom0]] (seeds: one LONG column "n"). */
-  private def pairsIdFrom(esg: Compiler.EncodedSnapshotGraph, path: Path,
-                          seeds0: DataFrame): DataFrame = {
-    val seeds = seeds0.toDF("n").distinct()
-    def idIdentity: DataFrame =
-      allNodeIds(esg).join(seeds, col("src") === col("n"), "left_semi")
-    path match {
-      case PLink(_) =>
-        pairsId(esg, path).join(seeds, col("src") === col("n"), "left_semi")
-      case PInverse(PLink(i)) =>
-        pairsId(esg, PInverse(PLink(i)))
-          .join(seeds, col("src") === col("n"), "left_semi")
-      case PInverse(q) => pairsIdFrom(esg, inverse(q), seeds)
-      case PSeq(a, b) =>
-        val l = pairsIdFrom(esg, a, seeds)
-        val r = pairsIdFrom(esg, b, l.select(col("dst").as("n")))
-        l.select(col("src"), col("dst").as("__mid"))
-          .join(r.select(col("src").as("__mid2"), col("dst")),
-            col("__mid") === col("__mid2"))
-          .select(col("src"), col("dst"))
-      case PAlt(a, b) =>
-        pairsIdFrom(esg, a, seeds).union(pairsIdFrom(esg, b, seeds))
-      case POneOrMore(q) =>
-        Graphs.reachableFrom(pairsId(esg, q).select(col("src"), col("dst")), seeds)
-      case PZeroOrMore(q) =>
-        Graphs.reachableFrom(pairsId(esg, q).select(col("src"), col("dst")), seeds)
-          .union(idIdentity).distinct()
-      case PZeroOrOne(q) =>
-        pairsIdFrom(esg, q, seeds).union(idIdentity).distinct()
-      case PFixedLength(q, n) =>
-        require(n >= 1, "PFixedLength n must be >= 1")
-        var acc = pairsIdFrom(esg, q, seeds)
-        for (_ <- 2 to n) {
-          val nxt = pairsIdFrom(esg, q, acc.select(col("dst").as("n")))
-          acc = acc.select(col("src"), col("dst").as("__m"))
-            .join(nxt.select(col("src").as("__m2"), col("dst")),
-              col("__m") === col("__m2"))
-            .select(col("src"), col("dst"))
-        }
-        acc
-      case PMod(q, min, max) =>
-        require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
-        if (max < 0) {
-          val head =
-            if (min == 0) idIdentity
-            else pairsIdFrom(esg, PFixedLength(q, min), seeds)
-          val star = pairsIdFrom(esg, PZeroOrMore(q), head.select(col("dst").as("n")))
-          head.select(col("src"), col("dst").as("__m"))
-            .join(star.select(col("src").as("__m2"), col("dst")),
-              col("__m") === col("__m2"))
-            .select(col("src"), col("dst")).distinct()
-        } else {
-          val parts = (math.max(min, 1) to max)
-            .map(k => pairsIdFrom(esg, PFixedLength(q, k), seeds))
-          val fixed = if (parts.isEmpty) idIdentity else parts.reduce(_ union _)
-          val withZero = if (min == 0) fixed.union(idIdentity) else fixed
-          withZero.distinct()
-        }
-      case PDistinct(q) => pairsIdFrom(esg, q, seeds).distinct()
-      case PMulti(q) => pairsIdFrom(esg, q, seeds)
-      case other => throw new IllegalStateException(
-        s"pairsIdFrom: $other is not id-expressible (idExpressible out of sync)")
-    }
-  }
+  /** All (g, src, dst) pairs connected by `path` WITHIN each named graph of
+   * `nq`, a (g, s, p, o) named-quads frame (marker rows tolerated: every
+   * scan filters on p or s). One plan for ALL graphs — the shape that
+   * survives one-graph-per-document scale, where per-graph plan
+   * enumeration cannot. `seeds`: optional (g, n) rows. */
+  def graphPairs(nq: DataFrame, path: Path, seeds: Option[DataFrame]): DataFrame =
+    eval(graphSpace(nq), path, seeds)
 
-  /** Paths the id-space evaluator covers. PNegPropSet needs per-predicate
-   * KIND checks (a dictionary join per scan) — it keeps the decoded
-   * fallback; PShortest raises either way. */
+  /** (src, dst) LONG id pairs connected by an id-expressible `path`. */
+  private[graft] def idPairs(esg: EncodedSnapshotGraph, path: Path): DataFrame =
+    eval(idSpace(esg), path, None)
+
+  /** Paths the id space covers. PNegPropSet needs per-predicate KIND
+   * checks (a dictionary join per scan) — it stays in struct space;
+   * PShortest raises either way. */
   private def idExpressible(p: Path): Boolean = p match {
     case PLink(_) => true
     case PInverse(q) => idExpressible(q)
@@ -1952,78 +1807,81 @@ object PathEval {
     case _ => false
   }
 
-  /** (src, dst) LONG id pairs connected by `path` over the encoded
-   * layouts — the same recursion as [[pairs0]] with joins/closures on
-   * 8-byte ids. */
-  private[graft] def pairsId(esg: Compiler.EncodedSnapshotGraph,
-                             path: Path): DataFrame = path match {
-    case PLink(iri) =>
-      val ids = esg.idsOf(Seq(graft.model.Term.iri(iri)))
-      val scan = esg.idLayout("pos")
-      ids.values.headOption match {
-        case Some(pid) => scan.where(col("p_id") === pid)
-          .select(col("s_id").as("src"), col("o_id").as("dst"))
-        case None => scan.limit(0)
-          .select(col("s_id").as("src"), col("o_id").as("dst"))
-      }
-    case PInverse(p) =>
-      pairsId(esg, p).select(col("dst").as("src"), col("src").as("dst"))
-    case PAlt(a, b) => pairsId(esg, a).union(pairsId(esg, b))
-    case PSeq(a, b) =>
-      val l = pairsId(esg, a).select(col("src"), col("dst").as("__mid"))
-      val r = pairsId(esg, b).select(col("src").as("__mid2"), col("dst"))
-      l.join(r, col("__mid") === col("__mid2")).select(col("src"), col("dst"))
-    case POneOrMore(p) =>
-      Graphs.transitiveClosure(pairsId(esg, p))
-    case PZeroOrMore(p) =>
-      Graphs.transitiveClosure(pairsId(esg, p)).union(allNodeIds(esg)).distinct()
-    case PZeroOrOne(p) =>
-      pairsId(esg, p).union(allNodeIds(esg)).distinct()
-    case PFixedLength(p, n) =>
-      require(n >= 1, "PFixedLength n must be >= 1")
-      val base = pairsId(esg, p)
-      (2 to n).foldLeft(base) { (acc, _) =>
-        acc.select(col("src"), col("dst").as("__m"))
-          .join(base.select(col("src").as("__m2"), col("dst")),
-            col("__m") === col("__m2"))
-          .select(col("src"), col("dst"))
-      }
-    case PMod(p, min, max) =>
-      require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
-      if (max < 0) {
-        val head =
-          if (min == 0) allNodeIds(esg)
-          else pairsId(esg, PFixedLength(p, min))
-        val star = pairsId(esg, PZeroOrMore(p))
-        head.select(col("src"), col("dst").as("__m"))
-          .join(star.select(col("src").as("__m2"), col("dst")),
-            col("__m") === col("__m2"))
-          .select(col("src"), col("dst")).distinct()
-      } else {
-        val parts = (math.max(min, 1) to max).map(k => pairsId(esg, PFixedLength(p, k)))
-        val fixed =
-          if (parts.isEmpty) allNodeIds(esg)
-          else parts.reduce(_ union _)
-        val withZero = if (min == 0) fixed.union(allNodeIds(esg)) else fixed
-        withZero.distinct()
-      }
-    case PDistinct(p) => pairsId(esg, p).distinct()
-    case PMulti(p) => pairsId(esg, p)
-    case other => throw new IllegalStateException(
-      s"pairsId: $other is not id-expressible (idExpressible out of sync)")
+  /** Where a path evaluates. Every frame it yields has columns
+   * (keys…, src, dst). `link` scans one predicate IRI; `nps` scans the
+   * IRI-predicate triples outside an exclusion list (None: the id space,
+   * see [[idExpressible]]); `nodes` is the zero-length node set as
+   * identity pairs; `encoded` is the id-encoded snapshot to which an
+   * unseeded id-expressible subtree drops, decoding once. */
+  private final case class Space(
+      keys: Seq[String],
+      link: String => DataFrame,
+      nps: Option[Seq[String] => DataFrame],
+      nodes: () => DataFrame,
+      encoded: Option[EncodedSnapshotGraph])
+
+  /** The active graph's struct space. Paths evaluate in the active graph
+   * exactly like BGPs, so on a quad table only default-graph rows (and no
+   * empty-graph marker rows) participate — the BGP scan's definition. Over
+   * a store snapshot a link scans the POS layout with the predicate
+   * pushed down (the hot case: every closure's per-round probe). */
+  private def structSpace(g: GraphSource): Space = {
+    def active = Compiler.defaultGraphTriples(g.df)
+    Space(Nil,
+      iri => g match {
+        case sg: SnapshotGraph =>
+          sg.scanPattern(TriplePattern(TVar("src"), TConst(Term.iri(iri)), TVar("dst"))).df
+        case _ => predicateScan(active, Nil, TermCols.lex(col("p")) === iri)
+      },
+      Some(excluded => predicateScan(active, Nil, !TermCols.lex(col("p")).isin(excluded: _*))),
+      () => nodeSet(active, Nil),
+      Some(g).collect { case esg: EncodedSnapshotGraph => esg })
   }
 
-  /** Identity (id, id) pairs over every subject/object id. */
-  private def allNodeIds(esg: Compiler.EncodedSnapshotGraph): DataFrame = {
-    val spo = esg.idLayout("spo")
-    spo.select(col("s_id").as("n")).union(spo.select(col("o_id").as("n")))
-      .distinct().select(col("n").as("src"), col("n").as("dst"))
+  /** The encoded layouts' id space: a link is a POS scan with the
+   * predicate's id pushed down (a predicate outside the dictionary
+   * matches nothing). */
+  private def idSpace(esg: EncodedSnapshotGraph): Space = Space(Nil,
+    iri => {
+      val scan = esg.idLayout("pos")
+      val hits = esg.idsOf(Seq(Term.iri(iri))).values.headOption match {
+        case Some(pid) => scan.where(col("p_id") === pid)
+        case None => scan.limit(0)
+      }
+      hits.select(col("s_id").as("src"), col("o_id").as("dst"))
+    },
+    None,
+    () => {
+      val spo = esg.idLayout("spo")
+      spo.select(col("s_id").as("n")).union(spo.select(col("o_id").as("n")))
+        .distinct().select(col("n").as("src"), col("n").as("dst"))
+    },
+    None)
+
+  private def graphSpace(nq: DataFrame): Space = Space(Seq("g"),
+    iri => predicateScan(nq, Seq("g"), TermCols.lex(col("p")) === iri),
+    Some(excluded => predicateScan(nq, Seq("g"), !TermCols.lex(col("p")).isin(excluded: _*))),
+    () => nodeSet(nq.filter(col("s").isNotNull), Seq("g")),
+    None)
+
+  /** (keys…, s, o) of the triples of `t` whose predicate is an IRI
+   * satisfying `lexCond`. */
+  private def predicateScan(t: DataFrame, keys: Seq[String], lexCond: Column): DataFrame =
+    t.filter(TermCols.isIri(col("p")) && lexCond)
+      .select(keys.map(col) ++ Seq(col("s").as("src"), col("o").as("dst")): _*)
+
+  /** Identity pairs over every term occurring as subject or object of `t`,
+   * per key — SPARQL's zero-length-path node set. */
+  private def nodeSet(t: DataFrame, keys: Seq[String]): DataFrame = {
+    val n = t.select(keys.map(col) :+ col("s").as("n"): _*)
+      .union(t.select(keys.map(col) :+ col("o").as("n"): _*))
+      .filter(col("n").isNotNull).distinct()
+    n.select(keys.map(col) ++ Seq(col("n").as("src"), col("n").as("dst")): _*)
   }
 
   /** Decode an id-pair frame to term structs: ONE dictionary join per
    * endpoint, at the projection edge (SURVEY §1.6). */
-  private def decodeIdPairs(esg: Compiler.EncodedSnapshotGraph,
-                            idPairs: DataFrame): DataFrame = {
+  private def decodeIdPairs(esg: EncodedSnapshotGraph, idPairs: DataFrame): DataFrame = {
     def dict(tag: String) = esg.terms.select(col("id").as(s"__id_$tag"),
       struct(col("kind"), col("lex"), col("dt"), col("lang")).as(tag))
     idPairs
@@ -2032,272 +1890,103 @@ object PathEval {
       .select(col("__src_t").as("src"), col("__dst_t").as("dst"))
   }
 
-  private def pairs0(g: GraphSource, path: Path): DataFrame = path match {
-    case PLink(iri) => g match {
-      case sg: SnapshotGraph =>
-        sg.scanPattern(TriplePattern(TVar("src"),
-          TConst(graft.model.Term.iri(iri)), TVar("dst"))).df
-      case _ =>
-        activeTriples(g).filter(TermCols.isIri(col("p")) && TermCols.lex(col("p")) === iri)
-          .select(col("s").as("src"), col("o").as("dst"))
-    }
-    case PNegPropSet(fwd, inv) =>
-      // SPARQL 1.1 §9.1 NPS translation: !(p…|^q…) =
-      //   NPS(fwd)  ∪  ^NPS(inv) — each direction present only when its
-      // member list is (P_NegPropSet.java fwd/bwd split)
-      def dirScan(excluded: Seq[String], reversed: Boolean): DataFrame = {
-        val base = activeTriples(g).filter(TermCols.isIri(col("p")) &&
-          !TermCols.lex(col("p")).isin(excluded: _*))
-        if (reversed) base.select(col("o").as("src"), col("s").as("dst"))
-        else base.select(col("s").as("src"), col("o").as("dst"))
-      }
-      (fwd.nonEmpty, inv.nonEmpty) match {
-        case (_, false) => dirScan(fwd, reversed = false)
-        case (false, true) => dirScan(inv, reversed = true)
-        case (true, true) =>
-          dirScan(fwd, reversed = false).union(dirScan(inv, reversed = true))
-      }
-    case PInverse(p) =>
-      pairs(g, p).select(col("dst").as("src"), col("src").as("dst"))
-    case PAlt(a, b) => pairs(g, a).union(pairs(g, b)) // bag union (SPARQL alt)
-    case PSeq(a, b) =>
-      // bag semantics — one pair per intermediate node, matching the
-      // reference's TransformPathFlatten rewrite of p1/p2 into a BGP
-      val l = pairs(g, a).select(col("src"), col("dst").as("__mid"))
-      val r = pairs(g, b).select(col("src").as("__mid2"), col("dst"))
-      l.join(r, col("__mid") === col("__mid2"))
-        .select(col("src"), col("dst"))
-    case POneOrMore(p) =>
-      Graphs.transitiveClosure(pairs(g, p).select(col("src"), col("dst")))
-    case PZeroOrMore(p) =>
-      Graphs.transitiveClosure(pairs(g, p).select(col("src"), col("dst")))
-        .union(allNodes(g)).distinct()
-    case PZeroOrOne(p) =>
-      pairs(g, p).union(allNodes(g)).distinct()
-    case PFixedLength(p, n) =>
-      require(n >= 1, "PFixedLength n must be >= 1")
-      val base = pairs(g, p)
-      (2 to n).foldLeft(base) { (acc, _) =>
-        acc.select(col("src"), col("dst").as("__m"))
-          .join(base.select(col("src").as("__m2"), col("dst")), col("__m") === col("__m2"))
-          .select(col("src"), col("dst"))
-      }
-    case PMod(p, min, max) =>
-      require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
-      if (max < 0) {
-        // p{n,} = p{n} then p* — the closure handles the unbounded tail
-        val head =
-          if (min == 0) allNodes(g)
-          else pairs(g, PFixedLength(p, min))
-        val star = pairs(g, PZeroOrMore(p))
-        head.select(col("src"), col("dst").as("__m"))
-          .join(star.select(col("src").as("__m2"), col("dst")), col("__m") === col("__m2"))
-          .select(col("src"), col("dst")).distinct()
+  /** The path evaluator. `seeds0`: optional (keys…, n) seed rows. */
+  private def eval(sp: Space, path: Path, seeds0: Option[DataFrame]): DataFrame = {
+    val keys = sp.keys.map(col)
+    // seed key columns are renamed: a left-semi join against a frame
+    // carrying the same key names would not resolve
+    val seeds = seeds0.map(_.toDF(sp.keys.map("__s" + _) :+ "n": _*).distinct())
+    def restrict(d: DataFrame, s: DataFrame): DataFrame =
+      d.join(s, (sp.keys.map(k => col(k) === col("__s" + k)) :+
+        (col("src") === col("n"))).reduce(_ && _), "left_semi")
+    def identity: DataFrame = seeds.fold(sp.nodes())(restrict(sp.nodes(), _))
+    // the seeds of the next hop: each pair's dst, with its keys
+    def frontier(d: DataFrame): DataFrame = d.select(keys :+ col("dst").as("n"): _*)
+    def swap(d: DataFrame): DataFrame =
+      d.select(keys ++ Seq(col("dst").as("src"), col("src").as("dst")): _*)
+    // bag composition: one pair per intermediate node, matching the
+    // reference's TransformPathFlatten rewrite of p1/p2 into a BGP
+    def chain(l: DataFrame, r: DataFrame, mid: String): DataFrame =
+      l.select(keys ++ Seq(col("src"), col("dst").as(mid)): _*)
+        .join(r.select(sp.keys.map(k => col(k).as(s"__${k}2")) ++
+            Seq(col("src").as(mid + "2"), col("dst")): _*),
+          (sp.keys.map(k => col(k) === col(s"__${k}2")) :+
+            (col(mid) === col(mid + "2"))).reduce(_ && _))
+        .select(keys ++ Seq(col("src"), col("dst")): _*)
+    def closure(edges: DataFrame): DataFrame =
+      if (sp.keys.isEmpty) {
+        // select by NAME first: the loop renames positionally and scan
+        // output order is not guaranteed
+        val e = edges.select(col("src"), col("dst"))
+        seeds.fold(Graphs.transitiveClosure(e))(Graphs.reachableFrom(e, _))
       } else {
-        // bounded: union of the fixed lengths, distinct pairs (the ALP
-        // visited-set contract applies to mod paths in the reference)
-        val parts = (math.max(min, 1) to max).map(k => pairs(g, PFixedLength(p, k)))
-        val fixed =
-          if (parts.isEmpty) allNodes(g)
-          else parts.reduce(_ union _)
-        val withZero = if (min == 0) fixed.union(allNodes(g)) else fixed
-        withZero.distinct()
+        def pack(cols: Seq[Column], n: Column): Column =
+          struct(sp.keys.zip(cols).map { case (k, c) => c.as(k) } :+ n.as("n"): _*)
+        val packed = edges.select(pack(keys, col("src")).as("src"),
+          pack(keys, col("dst")).as("dst"))
+        seeds.fold(Graphs.transitiveClosure(packed)) { s =>
+          Graphs.reachableFrom(packed,
+            s.select(pack(sp.keys.map(k => col("__s" + k)), col("n")).as("n")))
+        }.select(sp.keys.map(k => col(s"src.$k").as(k)) ++
+          Seq(col("src.n").as("src"), col("dst.n").as("dst")): _*)
       }
-    // ARQ algebra-level extensions (PathEvaluator.java:142-160):
-    case PDistinct(p) => pairs(g, p).distinct()
-    case PMulti(p) => pairs(g, p) // bag pass-through; see PMulti scaladoc
-    case PShortest(p) =>
-      // the reference throws ARQNotImplemented here (PathEvaluator.java:158)
-      throw new UnsupportedOperationException(
-        s"P_Shortest is not implemented (matching the reference): $p")
-  }
-
-  /** Identity pairs over every term occurring as subject or object of the
-   * ACTIVE graph — SPARQL's zero-length-path node set. */
-  private def allNodes(g: GraphSource): DataFrame = {
-    val at = activeTriples(g)
-    val n = at.select(col("s").as("n"))
-      .union(at.select(col("o").as("n")))
-      .filter(col("n").isNotNull).distinct()
-    n.select(col("n").as("src"), col("n").as("dst"))
-  }
-
-  // ---- graph-threaded variant (single-plan GRAPH ?var) ----------------
-
-  /** All (g, src, dst) pairs connected by `path` WITHIN each named graph
-   * of `nq` (a (g, s, p, o) named-quads frame — marker rows tolerated:
-   * every case filters on p or s). One plan for ALL graphs: joins key on
-   * (g, node), closures pack (g, node) into the closure's node so a walk
-   * can never cross graphs — the shape that survives one-graph-per-
-   * document scale, where per-graph plan enumeration cannot. */
-  def pairsG(nq: DataFrame, path: Path): DataFrame = path match {
-    case PLink(iri) =>
-      nq.filter(TermCols.isIri(col("p")) && TermCols.lex(col("p")) === iri)
-        .select(col("g"), col("s").as("src"), col("o").as("dst"))
-    case PNegPropSet(fwd, inv) =>
-      def dirScan(excluded: Seq[String], reversed: Boolean): DataFrame = {
-        val base = nq.filter(TermCols.isIri(col("p")) &&
-          !TermCols.lex(col("p")).isin(excluded: _*))
-        if (reversed) base.select(col("g"), col("o").as("src"), col("s").as("dst"))
-        else base.select(col("g"), col("s").as("src"), col("o").as("dst"))
-      }
-      (fwd.nonEmpty, inv.nonEmpty) match {
-        case (_, false) => dirScan(fwd, reversed = false)
-        case (false, true) => dirScan(inv, reversed = true)
-        case (true, true) =>
-          dirScan(fwd, reversed = false).union(dirScan(inv, reversed = true))
-      }
-    case PInverse(p) =>
-      pairsG(nq, p).select(col("g"), col("dst").as("src"), col("src").as("dst"))
-    case PAlt(a, b) => pairsG(nq, a).union(pairsG(nq, b))
-    case PSeq(a, b) =>
-      val l = pairsG(nq, a).select(col("g"), col("src"), col("dst").as("__mid"))
-      val r = pairsG(nq, b)
-        .select(col("g").as("__g2"), col("src").as("__mid2"), col("dst"))
-      l.join(r, col("g") === col("__g2") && col("__mid") === col("__mid2"))
-        .select(col("g"), col("src"), col("dst"))
-    case POneOrMore(p) => closureG(pairsG(nq, p))
-    case PZeroOrMore(p) =>
-      closureG(pairsG(nq, p)).union(allNodesG(nq)).distinct()
-    case PZeroOrOne(p) =>
-      pairsG(nq, p).union(allNodesG(nq)).distinct()
-    case PFixedLength(p, n) =>
-      require(n >= 1, "PFixedLength n must be >= 1")
-      val base = pairsG(nq, p)
-      (2 to n).foldLeft(base) { (acc, _) =>
-        acc.select(col("g"), col("src"), col("dst").as("__m"))
-          .join(base.select(col("g").as("__g2"), col("src").as("__m2"), col("dst")),
-            col("g") === col("__g2") && col("__m") === col("__m2"))
-          .select(col("g"), col("src"), col("dst"))
-      }
-    case PMod(p, min, max) =>
-      require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
-      if (max < 0) {
-        val head =
-          if (min == 0) allNodesG(nq)
-          else pairsG(nq, PFixedLength(p, min))
-        val star = pairsG(nq, PZeroOrMore(p))
-        head.select(col("g"), col("src"), col("dst").as("__m"))
-          .join(star.select(col("g").as("__g2"), col("src").as("__m2"), col("dst")),
-            col("g") === col("__g2") && col("__m") === col("__m2"))
-          .select(col("g"), col("src"), col("dst")).distinct()
-      } else {
-        val parts = (math.max(min, 1) to max).map(k => pairsG(nq, PFixedLength(p, k)))
-        val fixed =
-          if (parts.isEmpty) allNodesG(nq)
-          else parts.reduce(_ union _)
-        val withZero = if (min == 0) fixed.union(allNodesG(nq)) else fixed
-        withZero.distinct()
-      }
-    case PDistinct(p) => pairsG(nq, p).distinct()
-    case PMulti(p) => pairsG(nq, p)
-    case PShortest(p) =>
-      throw new UnsupportedOperationException(
-        s"P_Shortest is not implemented (matching the reference): $p")
-  }
-
-  /** Per-graph transitive closure in ONE distributed loop: the graph name
-   * rides inside the closure's node — struct(g, n) — so frontier joins
-   * can only extend walks within a single graph. */
-  private def closureG(edges: DataFrame): DataFrame = {
-    val packed = edges.select(
-      struct(col("g").as("g"), col("src").as("n")).as("src"),
-      struct(col("g").as("g"), col("dst").as("n")).as("dst"))
-    Graphs.transitiveClosure(packed)
-      .select(col("src.g").as("g"), col("src.n").as("src"), col("dst.n").as("dst"))
-  }
-
-  /** Per-graph SEEDED reachability (the GRAPH ?var twin of the ALP
-   * seeding): seeds are (g, n) rows; nodes pack as struct(g, n) exactly
-   * like [[closureG]], so the frontier walks each graph's cone from its
-   * own seeds and never crosses graphs. */
-  private def reachableFromG(edges: DataFrame, seeds: DataFrame): DataFrame = {
-    val packed = edges.select(
-      struct(col("g").as("g"), col("src").as("n")).as("src"),
-      struct(col("g").as("g"), col("dst").as("n")).as("dst"))
-    val packedSeeds = seeds.toDF("g", "n")
-      .select(struct(col("g").as("g"), col("n").as("n")).as("n"))
-    Graphs.reachableFrom(packed, packedSeeds)
-      .select(col("src.g").as("g"), col("src.n").as("src"), col("dst.n").as("dst"))
-  }
-
-  /** Per-graph seeded pairs — [[pairsFrom0]] with the graph name threaded
-   * through every join/closure key. `seeds0`: (g, n) rows. Returns the
-   * (g, src, dst) rows of [[pairsG]] restricted to src ∈ that graph's
-   * seeds, walking only the seeded cones. */
-  def pairsGFrom(nq: DataFrame, path: Path, seeds0: DataFrame): DataFrame = {
-    val seeds = seeds0.toDF("__sg", "__sn").distinct()
-    def restrict(d: DataFrame): DataFrame =
-      d.join(seeds, col("g") === col("__sg") && col("src") === col("__sn"),
-        "left_semi")
-    def identity: DataFrame = restrict(allNodesG(nq))
-    def reseed(d: DataFrame): DataFrame =
-      d.select(col("g"), col("dst").as("n"))
     path match {
-      case PLink(_) | PNegPropSet(_, _) | PInverse(PLink(_)) =>
-        restrict(pairsG(nq, path))
-      case PInverse(q) => pairsGFrom(nq, inverse(q), seeds)
+      case _ if seeds.isEmpty && sp.encoded.nonEmpty && idExpressible(path) =>
+        decodeIdPairs(sp.encoded.get, eval(idSpace(sp.encoded.get), path, None))
+      // a seeded leaf is one scan: restrict src by a semi-join against the
+      // (small, broadcastable) seeds; Catalyst keeps the scan's pushdown
+      case PLink(_) | PNegPropSet(_, _) | PInverse(PLink(_)) if seeds.nonEmpty =>
+        restrict(eval(sp, path, None), seeds.get)
+      case PLink(iri) => sp.link(iri)
+      case PNegPropSet(fwd, inv) =>
+        val scan = sp.nps.getOrElse(throw new IllegalStateException(
+          s"$path is not id-expressible (idExpressible out of sync)"))
+        // SPARQL 1.1 §9.1 NPS translation: !(p…|^q…) =
+        //   NPS(fwd)  ∪  ^NPS(inv) — each direction present only when its
+        // member list is (P_NegPropSet.java fwd/bwd split)
+        (fwd.nonEmpty, inv.nonEmpty) match {
+          case (_, false) => scan(fwd)
+          case (false, true) => swap(scan(inv))
+          case (true, true) => scan(fwd).union(swap(scan(inv)))
+        }
+      case PInverse(q) =>
+        if (seeds.nonEmpty) eval(sp, inverse(q), seeds) else swap(eval(sp, q, None))
+      case PAlt(a, b) => eval(sp, a, seeds).union(eval(sp, b, seeds)) // bag union
       case PSeq(a, b) =>
-        val l = pairsGFrom(nq, a, seeds)
-        val r = pairsGFrom(nq, b, reseed(l))
-        l.select(col("g"), col("src"), col("dst").as("__mid"))
-          .join(r.select(col("g").as("__g2"), col("src").as("__mid2"), col("dst")),
-            col("g") === col("__g2") && col("__mid") === col("__mid2"))
-          .select(col("g"), col("src"), col("dst"))
-      case PAlt(a, b) =>
-        pairsGFrom(nq, a, seeds).union(pairsGFrom(nq, b, seeds))
-      case POneOrMore(q) =>
-        reachableFromG(pairsG(nq, q).select(col("g"), col("src"), col("dst")),
-          seeds)
-      case PZeroOrMore(q) =>
-        reachableFromG(pairsG(nq, q).select(col("g"), col("src"), col("dst")),
-          seeds).union(identity).distinct()
-      case PZeroOrOne(q) =>
-        pairsGFrom(nq, q, seeds).union(identity).distinct()
+        val l = eval(sp, a, seeds)
+        chain(l, eval(sp, b, seeds.map(_ => frontier(l))), "__mid")
+      // a closure's inner pairs stay global: they ARE the edge relation
+      // the seeded cone walks
+      case POneOrMore(q) => closure(eval(sp, q, None))
+      case PZeroOrMore(q) => closure(eval(sp, q, None)).union(identity).distinct()
+      case PZeroOrOne(q) => eval(sp, q, seeds).union(identity).distinct()
       case PFixedLength(q, n) =>
         require(n >= 1, "PFixedLength n must be >= 1")
-        var acc = pairsGFrom(nq, q, seeds)
-        for (_ <- 2 to n) {
-          val nxt = pairsGFrom(nq, q, reseed(acc))
-          acc = acc.select(col("g"), col("src"), col("dst").as("__m"))
-            .join(nxt.select(col("g").as("__g2"), col("src").as("__m2"), col("dst")),
-              col("g") === col("__g2") && col("__m") === col("__m2"))
-            .select(col("g"), col("src"), col("dst"))
+        val first = eval(sp, q, seeds)
+        (2 to n).foldLeft(first) { (acc, _) =>
+          chain(acc, if (seeds.isEmpty) first else eval(sp, q, Some(frontier(acc))), "__m")
         }
-        acc
       case PMod(q, min, max) =>
         require(min >= 0 && (max < 0 || max >= min), s"bad path mod {$min,$max}")
         if (max < 0) {
-          val head =
-            if (min == 0) identity
-            else pairsGFrom(nq, PFixedLength(q, min), seeds)
-          val star = pairsGFrom(nq, PZeroOrMore(q), reseed(head))
-          head.select(col("g"), col("src"), col("dst").as("__m"))
-            .join(star.select(col("g").as("__g2"), col("src").as("__m2"), col("dst")),
-              col("g") === col("__g2") && col("__m") === col("__m2"))
-            .select(col("g"), col("src"), col("dst")).distinct()
+          // p{n,} = p{n} then p* — the closure handles the unbounded tail
+          val head = if (min == 0) identity else eval(sp, PFixedLength(q, min), seeds)
+          chain(head, eval(sp, PZeroOrMore(q), seeds.map(_ => frontier(head))), "__m")
+            .distinct()
         } else {
-          val parts = (math.max(min, 1) to max)
-            .map(k => pairsGFrom(nq, PFixedLength(q, k), seeds))
+          // bounded: union of the fixed lengths, distinct pairs (the ALP
+          // visited-set contract applies to mod paths in the reference)
+          val parts = (math.max(min, 1) to max).map(k => eval(sp, PFixedLength(q, k), seeds))
           val fixed = if (parts.isEmpty) identity else parts.reduce(_ union _)
-          val withZero = if (min == 0) fixed.union(identity) else fixed
-          withZero.distinct()
+          (if (min == 0) fixed.union(identity) else fixed).distinct()
         }
-      case PDistinct(q) => pairsGFrom(nq, q, seeds).distinct()
-      case PMulti(q) => pairsGFrom(nq, q, seeds)
+      // ARQ algebra-level extensions (PathEvaluator.java:142-160):
+      case PDistinct(q) => eval(sp, q, seeds).distinct()
+      case PMulti(q) => eval(sp, q, seeds) // bag pass-through; see PMulti scaladoc
       case PShortest(q) =>
+        // the reference throws ARQNotImplemented here (PathEvaluator.java:158)
         throw new UnsupportedOperationException(
           s"P_Shortest is not implemented (matching the reference): $q")
     }
-  }
-
-  /** Per-graph zero-length node set: (g, n, n) for every term occurring
-   * as subject or object in graph g. */
-  private def allNodesG(nq: DataFrame): DataFrame = {
-    val t = nq.filter(col("s").isNotNull)
-    val n = t.select(col("g"), col("s").as("n"))
-      .union(t.select(col("g"), col("o").as("n")))
-      .filter(col("n").isNotNull).distinct()
-    n.select(col("g"), col("n").as("src"), col("n").as("dst"))
   }
 }

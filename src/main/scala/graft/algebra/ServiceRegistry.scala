@@ -56,8 +56,9 @@ object ServiceRegistry {
    * formats this repo parses). Constructed lazily and never connecting
    * until `execute`, so it is safe to instantiate in a zero-egress
    * environment; unit tests drive it against an in-process loopback
-   * server. Non-2xx responses throw (SERVICE SILENT maps them to the
-   * unit table upstream, QueryExecHTTP-style). */
+   * server. Non-2xx responses and bodies over [[MaxResponseBytes]] throw
+   * (SERVICE SILENT maps them to the unit table upstream,
+   * QueryExecHTTP-style). */
   final class HttpServiceTransport(
       timeoutSeconds: Long = 60,
       /** GET/POST switch on total URL length — QueryExecHTTP's urlLimit. */
@@ -88,16 +89,34 @@ object ServiceRegistry {
         .header("Accept", accept)
         .timeout(java.time.Duration.ofSeconds(timeoutSeconds))
         .build()
-      val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+      val resp = client.send(req, HttpResponse.BodyHandlers.ofInputStream())
+      val body = readCapped(resp.body(), endpointIri)
       if (resp.statusCode() / 100 != 2)
         throw new RuntimeException(
-          s"SERVICE <$endpointIri> HTTP ${resp.statusCode()}: " +
-            resp.body().take(200))
+          s"SERVICE <$endpointIri> HTTP ${resp.statusCode()}: " + body.take(200))
       val ct = resp.headers().firstValue("Content-Type")
         .orElse("application/sparql-results+json")
-      (ct, resp.body())
+      (ct, body)
     }
+
+    /** The response body as UTF-8 (the W3C result formats' encoding),
+     * read no further than [[MaxResponseBytes]]: a remote endpoint is
+     * untrusted, and the whole body is parsed in this JVM. */
+    private def readCapped(in: java.io.InputStream, endpointIri: String): String =
+      try {
+        val bytes = in.readNBytes(MaxResponseBytes + 1)
+        if (bytes.length > MaxResponseBytes)
+          throw new ServiceResponseTooLarge(endpointIri)
+        new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+      } finally in.close()
   }
+
+  /** Largest SERVICE response body [[HttpServiceTransport]] reads. */
+  val MaxResponseBytes: Int = 32 << 20
+
+  /** A SERVICE response body exceeded [[MaxResponseBytes]]. */
+  final class ServiceResponseTooLarge(endpointIri: String) extends RuntimeException(
+    s"SERVICE <$endpointIri> response exceeds $MaxResponseBytes bytes")
 
   /** Parse a transport response by content type with the repo's result-set
    * readers. */

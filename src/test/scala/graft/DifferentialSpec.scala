@@ -105,14 +105,27 @@ class DifferentialSpec extends AnyFunSuite {
         }
       case PInverse(q) => pathRel(g, q).map(_.swap)
       case PAlt(a, b) => pathRel(g, a) ++ pathRel(g, b)
-      case PSeq(a, b) =>
-        val (la, lb) = (pathRel(g, a), pathRel(g, b))
-        for ((x1, m) <- la; (m2, y) <- lb if m == m2) yield (x1, y)
+      case PSeq(a, b) => compose(pathRel(g, a), pathRel(g, b))
       case POneOrMore(q) => tc(pathRel(g, q))
       case PZeroOrMore(q) => (tc(pathRel(g, q)) ++ allNodes(g)).distinct
       case PZeroOrOne(q) => (pathRel(g, q) ++ allNodes(g)).distinct
+      case PFixedLength(q, n) =>
+        val base = pathRel(g, q)
+        (2 to n).foldLeft(base)((acc, _) => compose(acc, base))
+      case PMod(q, min, max) =>
+        // every length from min to max, as distinct pairs; length 0 is
+        // the zero-length node set, an unbounded tail is q*
+        def power(k: Int) = if (k == 0) allNodes(g) else pathRel(g, PFixedLength(q, k))
+        if (max < 0) compose(power(min), pathRel(g, PZeroOrMore(q))).distinct
+        else (min to max).flatMap(power).distinct
+      case PDistinct(q) => pathRel(g, q).distinct
+      case PMulti(q) => pathRel(g, q)
       case other => sys.error(s"RefEval: unsupported path $other")
     }
+
+    /** Bag composition: one pair per intermediate node. */
+    def compose(la: Seq[(Term, Term)], lb: Seq[(Term, Term)]): Seq[(Term, Term)] =
+      for ((x1, m) <- la; (m2, y) <- lb if m == m2) yield (x1, y)
 
     /** 4-slot unification for QuadBgp: the graph slot joins exactly like
      * s/p/o (Compiler extraSlots); GRAPH never matches the default graph. */
@@ -186,8 +199,7 @@ class DifferentialSpec extends AnyFunSuite {
             // a per-left-row cut of UNORDERED rows is implementation-
             // arbitrary — the oracle refuses rather than guessing
             sys.error("lateral oracle: Slice without a full-key Order")
-          case Distinct(rb) =>
-            eval(rb, g, x).filter(compatible(m1, _)).map(m1 ++ _).distinct
+          case Distinct(rb) => evalLat(rb, m1).distinct
           case Group(keys, aggs, rb) if keys.nonEmpty =>
             // per-left-row KEYED aggregation (Compiler.lat Group case:
             // group by left cols + keys over the compatible merged rows)
@@ -199,6 +211,26 @@ class DifferentialSpec extends AnyFunSuite {
               }
           case Group(_, _, _) =>
             sys.error("lateral oracle: keyless per-left-row Group not mirrored")
+          // binary operators substitute the left row into both operands
+          // (Compiler.lat); EXISTS / MINUS operands see it through the
+          // compatibility test on the merged row
+          case Join(a, b) => evalLat(a, m1).flatMap(evalLat(b, _))
+          case Union(a, b) => evalLat(a, m1) ++ evalLat(b, m1)
+          case LeftJoin(a, b, cond) =>
+            evalLat(a, m1).flatMap { m =>
+              val ms = evalLat(b, m).filter(mm => cond.forall(c => x.evalBool(c, mm).contains(true)))
+              if (ms.nonEmpty) ms else Seq(m)
+            }
+          case SemiJoin(a, b) =>
+            val rs = eval(b, g, x)
+            evalLat(a, m1).filter(m => rs.exists(compatible(m, _)))
+          case AntiJoin(a, b) =>
+            val rs = eval(b, g, x)
+            evalLat(a, m1).filter(m => !rs.exists(compatible(m, _)))
+          case Minus(a, b) =>
+            val rs = eval(b, g, x)
+            evalLat(a, m1).filter(m => !rs.exists(r =>
+              compatible(m, r) && m.keySet.intersect(r.keySet).nonEmpty))
           case rb =>
             eval(rb, g, x).filter(compatible(m1, _)).map(m1 ++ _)
         }
@@ -352,7 +384,7 @@ class DifferentialSpec extends AnyFunSuite {
 
   private def genPath(rnd: Random, depth: Int): Path = {
     def link() = PLink(EX + "p" + rnd.nextInt(3))
-    if (depth <= 0) {
+    val p = if (depth <= 0) {
       if (rnd.nextInt(5) == 0) {
         // negated property set: random forward/inverse member mix, never
         // both-empty (no !() syntax exists)
@@ -361,15 +393,45 @@ class DifferentialSpec extends AnyFunSuite {
         if (fwd.isEmpty && inv.isEmpty) PNegPropSet(Seq(EX + "p0"), Nil)
         else PNegPropSet(fwd, inv)
       } else link()
-    } else rnd.nextInt(7) match {
+    } else rnd.nextInt(if (textMode) 10 else 12) match {
       case 0 => PInverse(genPath(rnd, depth - 1))
       case 1 => PSeq(genPath(rnd, depth - 1), genPath(rnd, depth - 1))
       case 2 => PAlt(genPath(rnd, depth - 1), genPath(rnd, depth - 1))
       case 3 => POneOrMore(genPath(rnd, depth - 1))
       case 4 => PZeroOrMore(genPath(rnd, depth - 1))
       case 5 => PZeroOrOne(genPath(rnd, depth - 1))
+      case 6 => PFixedLength(genPath(rnd, depth - 1), 1 + rnd.nextInt(3))
+      case 7 => // {min,max}
+        val min = rnd.nextInt(3)
+        PMod(genPath(rnd, depth - 1), min, min + rnd.nextInt(2))
+      case 8 => PMod(genPath(rnd, depth - 1), rnd.nextInt(3), -1) // {min,}
+      // ARQ algebra-only extensions: no query-text syntax to render
+      case 10 => PDistinct(genPath(rnd, depth - 1))
+      case 11 => PMulti(genPath(rnd, depth - 1))
       case _ => genPath(rnd, 0)
     }
+    pathArms ++= armsOf(p)
+    p
+  }
+
+  /** Path arms generated since the last clear: each differential over the
+   * path evaluator asserts its fixed seeds reach every arm in [[PathArms]]
+   * (every Path case but the unimplemented PShortest, and PMod with
+   * min 0, a bounded and an unbounded max). */
+  private val pathArms = scala.collection.mutable.Set[String]()
+  private val PathArms = Set("PLink", "PNegPropSet", "PInverse", "PSeq", "PAlt",
+    "POneOrMore", "PZeroOrMore", "PZeroOrOne", "PFixedLength", "PMod", "PDistinct",
+    "PMulti", "PMod{0,_}", "PMod{_,m}", "PMod{_,}")
+  private def armsOf(p: Path): Seq[String] = p match {
+    case PMod(_, min, max) =>
+      Seq("PMod", if (max < 0) "PMod{_,}" else "PMod{_,m}") ++
+        (if (min == 0) Seq("PMod{0,_}") else Nil)
+    case other => Seq(other.getClass.getSimpleName)
+  }
+  private def assertEveryPathArm(what: String): Unit = {
+    val missing = PathArms -- pathArms
+    assert(missing.isEmpty,
+      s"$what never generated path arm(s) ${missing.toSeq.sorted.mkString(", ")}")
   }
 
   private def showPath(p: Path): String = p match {
@@ -382,6 +444,10 @@ class DifferentialSpec extends AnyFunSuite {
     case PZeroOrOne(q) => s"(${showPath(q)})?"
     case PNegPropSet(f, i) =>
       s"!(${(f.map(_.stripPrefix(EX)) ++ i.map("^" + _.stripPrefix(EX))).mkString("|")})"
+    case PFixedLength(q, n) => s"(${showPath(q)}){$n}"
+    case PMod(q, mn, mx) => s"(${showPath(q)}){$mn,${if (mx < 0) "" else mx}}"
+    case PDistinct(q) => s"distinct(${showPath(q)})"
+    case PMulti(q) => s"multi(${showPath(q)})"
     case other => other.toString
   }
 
@@ -568,11 +634,11 @@ class DifferentialSpec extends AnyFunSuite {
                           else Some(v -> genTerm(rnd))).toMap
         }
         (Table(vs, rows), vs)
-      case 1 => // property path: var/const endpoint mix
+      case 1 | 2 => // property path: var/const endpoint mix
         def end() = if (rnd.nextInt(10) < 6) TVar(varPool(rnd.nextInt(varPool.size)))
                     else TConst(genTerm(rnd))
         val (s, o) = (end(), end())
-        val pp = PathPattern(s, genPath(rnd, 1 + rnd.nextInt(2)), o)
+        val pp = PathPattern(s, genPath(rnd, 2), o)
         (pp, Seq(s, o).collect { case TVar(n) => n }.distinct)
       case _ =>
         val pats = (0 until 1 + rnd.nextInt(2)).map(_ => genPattern(rnd))
@@ -735,6 +801,8 @@ class DifferentialSpec extends AnyFunSuite {
     case PZeroOrOne(q) => s"(${rPath(q)})?"
     case PNegPropSet(f, i) =>
       s"!(${(f.map(x => s"<$x>") ++ i.map(x => s"^<$x>")).mkString("|")})"
+    case PFixedLength(q, n) => s"(${rPath(q)}){$n}"
+    case PMod(q, mn, mx) => s"(${rPath(q)}){$mn,${if (mx < 0) "" else mx}}"
     case other => sys.error(s"no syntax for $other")
   }
 
@@ -827,6 +895,7 @@ class DifferentialSpec extends AnyFunSuite {
   test(s"differential: compiler ≡ naive evaluator on $iterations random plans") {
     val failures = Seq.newBuilder[String]
     var checked = 0
+    pathArms.clear()
     (0 until iterations).foreach { i =>
       val rnd = new Random(0xD1FF + i)
       val x = new DExprs
@@ -856,6 +925,7 @@ class DifferentialSpec extends AnyFunSuite {
     val fs = failures.result()
     assert(fs.isEmpty, s"${fs.size}/$checked differential failures:\n" +
       fs.take(6).mkString("\n"))
+    if (iterations >= 60) assertEveryPathArm("struct differential")
   }
 
   /** Store-path differential: the same random plans evaluated against a
@@ -912,6 +982,7 @@ class DifferentialSpec extends AnyFunSuite {
       gdf.withColumn("repo", lit("r0")).withColumn("lang", lit("x")),
       snap, parent = None, partitions = 2)
     val sg = Compiler.EncodedSnapshotGraph(spark, snap)
+    pathArms.clear()
     (0 until 30).foreach { i =>
       val rnd = new Random(0xE6C0 + 1 + i)
       val x = new DExprs
@@ -933,6 +1004,7 @@ class DifferentialSpec extends AnyFunSuite {
     val fs = failures.result()
     assert(fs.isEmpty, s"${fs.size} encoded-store-differential failures:\n" +
       fs.take(6).mkString("\n"))
+    assertEveryPathArm("encoded-store differential")
   }
 
   /** Dataset (quad) differential: random plans over a dataset with a
@@ -944,6 +1016,7 @@ class DifferentialSpec extends AnyFunSuite {
     import graft.model.Quad
     val failures = Seq.newBuilder[String]
     quadMode = true
+    pathArms.clear()
     try (0 until 40).foreach { i =>
       val rnd = new Random(0x9AAD + i)
       val x = new DExprs
@@ -973,6 +1046,7 @@ class DifferentialSpec extends AnyFunSuite {
     val fs = failures.result()
     assert(fs.isEmpty, s"${fs.size} quad-differential failures:\n" +
       fs.take(6).mkString("\n"))
+    assertEveryPathArm("quad differential")
   }
 
   /** GRAPH ?var single-plan differential: rich GRAPH-LOCAL bodies
@@ -987,6 +1061,7 @@ class DifferentialSpec extends AnyFunSuite {
     val failures = Seq.newBuilder[String]
     quadMode = true
     spark.conf.set("graft.graphVarEnumMax", "0") // enumeration cannot serve
+    pathArms.clear()
     try (0 until 40).foreach { i =>
       val rnd = new Random(0x51A6 + i)
       val x = new DExprs
@@ -999,10 +1074,11 @@ class DifferentialSpec extends AnyFunSuite {
       val qdf = spark.createDataset(allQuads)(
         org.apache.spark.sql.Encoders.product[Quad]).toDF()
       def leaf(): Op = rnd.nextInt(6) match {
-        case 0 =>
+        case 0 | 2 =>
           val s = if (rnd.nextBoolean()) TVar(varPool(rnd.nextInt(varPool.size)))
                   else TConst(iri("s" + rnd.nextInt(5)))
-          PathPattern(s, genPath(rnd, 1), TVar(varPool(rnd.nextInt(varPool.size))))
+          PathPattern(s, genPath(rnd, 1 + rnd.nextInt(2)),
+            TVar(varPool(rnd.nextInt(varPool.size))))
         case 1 =>
           val vs = rnd.shuffle(varPool).take(1 + rnd.nextInt(2)).sorted
           Table(vs, (0 until 1 + rnd.nextInt(2)).map(_ =>
@@ -1021,10 +1097,8 @@ class DifferentialSpec extends AnyFunSuite {
           case 5 => AntiJoin(body(depth - 1), body(depth - 1))
           case 6 => Distinct(body(depth - 1))
           // LATERAL threads the hidden graph column through the
-          // correlated leaf compiler (r5); per-row-sensitive (Distinct)
-          // and plain RHSs both exercised
-          case 7 => Lateral(body(depth - 1),
-            if (rnd.nextBoolean()) Distinct(leaf()) else leaf())
+          // correlated leaf compiler into every operator of the RHS
+          case 7 => Lateral(body(depth - 1), body(depth - 1))
           case _ => leaf()
         }
       val v = varPool(rnd.nextInt(varPool.size))
@@ -1049,6 +1123,7 @@ class DifferentialSpec extends AnyFunSuite {
     val fs = failures.result()
     assert(fs.isEmpty, s"${fs.size} GRAPH-?var-single-plan failures:\n" +
       fs.take(6).mkString("\n"))
+    assertEveryPathArm("GRAPH ?var differential")
   }
 
   /** SPARQL TEXT differential: render each random plan as query text,

@@ -228,6 +228,36 @@ class PlanSpec extends AnyFunSuite {
     finally spark.conf.unset("graft.graphVarSinglePlan")
   }
 
+  /** GRAPH ?g { ?x p ?y LATERAL { ?y p ?z . ?z p ?w } } on the single
+   * plan, as (g, x, w) rows: both operands of the Join RHS must scan the
+   * active named graph, not the default graph. */
+  private def lateralJoinRows(quads: Seq[graft.model.Quad]): Set[(String, String, String)] = {
+    def tp(s: String, o: String) = TriplePattern(TVar(s), TConst(Term.iri(EX + "p")), TVar(o))
+    val op = GraphVarEnum("g", Lateral(Bgp(Seq(tp("x", "y"))),
+      Join(Bgp(Seq(tp("y", "z"))), Bgp(Seq(tp("z", "w"))))))
+    spark.conf.set("graft.graphVarEnumMax", "0") // single-plan only
+    try Compiler.compile(op, spark.createDataset(quads).toDF())
+      .select(col("g.lex"), col("x.lex"), col("w.lex")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    finally spark.conf.unset("graft.graphVarEnumMax")
+  }
+  private def pq(s: String, o: String, g: Term) =
+    graft.model.Quad(Term.iri(EX + s), Term.iri(EX + "p"), Term.iri(EX + o), g)
+
+  test("LATERAL under GRAPH ?var: a Join RHS finds its chain in the named graph") {
+    val g1 = Term.iri(EX + "g1")
+    val rows = lateralJoinRows(Seq(pq("a", "b", g1), pq("b", "c", g1), pq("c", "e", g1),
+      pq("c", "d", Term.iri(EX + "g2"))))
+    assert(rows == Set((EX + "g1", EX + "a", EX + "e")), s"LATERAL Join RHS: $rows")
+  }
+
+  test("LATERAL under GRAPH ?var: a Join RHS never reads the default graph") {
+    val g1 = Term.iri(EX + "g1")
+    val rows = lateralJoinRows(Seq(pq("a", "b", g1), pq("b", "c", g1),
+      pq("c", "d", Term.iri(EX + "g2")), pq("c", "e", Term.defaultGraph)))
+    assert(rows.isEmpty, s"LATERAL Join RHS read the default graph: $rows")
+  }
+
   test("MINUS with all-certain shared vars plans as an equi anti-join (no BNLJ)") {
     val g = spark.createDataset((1 to 400).map(k => Triple(
       Term.iri(EX + "s" + k),
@@ -345,7 +375,7 @@ class PlanSpec extends AnyFunSuite {
     val esg = Compiler.EncodedSnapshotGraph(spark, dir)
     // the id-space pair frame: only LONG columns, POS scan with the
     // predicate pushed as an ID filter — no struct decode inside the walk
-    val idPairs = PathEval.pairsId(esg, PSeq(PLink(EX + "p"), PLink(EX + "p")))
+    val idPairs = PathEval.idPairs(esg, PSeq(PLink(EX + "p"), PLink(EX + "p")))
     assert(idPairs.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType),
       "id-space path frame must be all LONG columns")

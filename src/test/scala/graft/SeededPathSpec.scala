@@ -234,13 +234,18 @@ class SeededPathSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.graphVarEnumMax")
   }
 
-  test("encoded snapshot: id-space seeded walk matches struct result") {
+  /** [[randomGraph]] as an id-encoded snapshot. */
+  private lazy val encodedRandom: Compiler.EncodedSnapshotGraph = {
     val dir = java.nio.file.Files.createTempDirectory("graft_seeded_enc")
       .toString + "/snap"
     graft.store.TripleStore.materializeEncoded(
       randomGraph.withColumn("repo", lit("r0")).withColumn("lang", lit("x")),
       dir, None, partitions = 2)
-    val esg = Compiler.EncodedSnapshotGraph(spark, dir)
+    Compiler.EncodedSnapshotGraph(spark, dir)
+  }
+
+  test("encoded snapshot: id-space seeded walk matches struct result") {
+    val esg = encodedRandom
     val out = Compiler.compile(
       PathPattern(c(i("n0")), POneOrMore(PLink(P)), v("x")), esg)
     val expected = Compiler.compile(
@@ -248,5 +253,22 @@ class SeededPathSpec extends AnyFunSuite {
       Compiler.DfGraph(randomGraph))
     assert(lexSet(out, "x") == lexSet(expected, "x"))
     assert(lexSet(out, "x").nonEmpty)
+  }
+
+  test("encoded snapshot: a path outside id space matches struct, seeded and global") {
+    // the negated set keeps the whole path in struct space; its closure
+    // subtree is id-expressible, so it runs on ids and decodes once
+    val path = PSeq(PNegPropSet(Seq(P), Nil), POneOrMore(PLink(P)))
+    val global = PathEval.pairs(Compiler.DfGraph(randomGraph), path)
+    assert(pairSet(PathEval.pairs(encodedRandom, path)) == pairSet(global))
+    for (r <- Seq("n1", "n7", "n31")) {
+      val exp = pairSet(global.filter(col("src") === TermCols.const(i(r))))
+      assert(pairSet(PathEval.pairsFromConst(encodedRandom, path, i(r))) == exp,
+        s"const-seeded from $r")
+      val seeds = spark.range(1).select(TermCols.const(i(r)).as("n"))
+      assert(pairSet(PathEval.pairsFromSeeds(encodedRandom, path, seeds)) == exp,
+        s"join-seeded from $r")
+    }
+    assert(pairSet(global).nonEmpty)
   }
 }

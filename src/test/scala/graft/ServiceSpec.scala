@@ -155,4 +155,36 @@ class ServiceSpec extends AnyFunSuite {
       assert(silent.count() == 3)
     } finally ServiceRegistry.clear()
   }
+
+  test("SERVICE response over the byte cap raises; SILENT gives the unit table") {
+    import java.net.InetSocketAddress
+    import com.sun.net.httpserver.HttpServer
+    // an endpoint whose result document runs past the cap, streamed
+    // chunked so no Content-Length announces it
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/sparql", ex => {
+      ex.getResponseHeaders.set("Content-Type", "application/sparql-results+json")
+      ex.sendResponseHeaders(200, 0)
+      val chunk = Array.fill[Byte](1 << 20)(' ')
+      try (0 to ServiceRegistry.MaxResponseBytes / chunk.length)
+        .foreach(_ => ex.getResponseBody.write(chunk))
+      catch { case _: java.io.IOException => () } // the client stopped reading
+      finally ex.close()
+    })
+    server.start()
+    val url = s"http://127.0.0.1:${server.getAddress.getPort}/sparql"
+    ServiceRegistry.registerTransport(url, new ServiceRegistry.HttpServiceTransport())
+    try {
+      intercept[ServiceRegistry.ServiceResponseTooLarge] {
+        Sparql.select(s"SELECT ?mail WHERE { SERVICE <$url> { ?s ?p ?mail } }",
+          localGraph).collect()
+      }
+      val out = Sparql.select(
+        s"""SELECT ?s ?n WHERE {
+              ?s <${EX}name> ?n .
+              SERVICE SILENT <$url> { ?s <${EX}email> ?mail }
+            }""", localGraph)
+      assert(out.count() == 3) // unit table joined: left rows survive
+    } finally { ServiceRegistry.clear(); server.stop(0) }
+  }
 }
